@@ -143,9 +143,16 @@ def decode_protobuf_jvm(
     Same output shape as ``decode_protobuf`` (from_protobuf) and
     ``decode_protobuf_wire`` (Python) so pipelines swap decoders freely.
     Malformed rows drop (D8).
+
+    The UDF runs once per row: it sits in a generator over a
+    one-element array, and the null filter on the generated column
+    cannot be pushed below it. A plain ``withColumn`` + ``filter`` lets
+    Catalyst substitute the alias into the pushed-down filter, which
+    then decodes every row a second time.
     """
     name, s = register_decoder(df.sparkSession, spec)
-    out = df.withColumn("r", F.call_function(name, F.col(value_col), F.lit(s)))
+    dec = F.call_function(name, F.col(value_col), F.lit(s))
+    out = df.withColumn("r", F.explode(F.array(dec)))
     return out.filter(F.col("r").isNotNull())
 
 

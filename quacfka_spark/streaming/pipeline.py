@@ -45,10 +45,12 @@ import threading
 import time
 from collections import OrderedDict
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from quacfka_spark.plans.custom import TransformRegistry
 from quacfka_spark.plans.normalizer import NormalizerSpec
@@ -417,14 +419,16 @@ class StreamingPipeline:
         self._ledger_root = os.path.join(config.output_dir, "_dedup_ledger")
         self._neardup_root = os.path.join(config.output_dir, "_neardup_ledger")
         self.query = None
-        # Per-epoch phase trace (r12 verdict #4): monotonic stamps +
-        # in-batch phase splits, appended by _process_batch. Together
-        # with the engine's own StreamingQueryProgress durationMs
-        # (walCommit/commitOffsets/latestOffset/addBatch) this
+        # Per-epoch phase trace: monotonic enter/exit stamps plus the
+        # in-batch split, appended by _process_batch. ``raw_s`` is the
+        # raw write (decode and dedup run inside it); ``derived_s`` is
+        # the normalized and custom sinks together with the ledger
+        # writes that overlap them; ``epilogue_s`` is post-SQL plus
+        # publish. Together with the engine's own StreamingQueryProgress
+        # durationMs (latestOffset/walCommit/commitOffsets/addBatch) this
         # decomposes the per-micro-batch fixed cost: the gap between
         # epoch N's exit and N+1's enter is engine-side (offset WAL,
-        # source planning, commit log); the in-batch split shows where
-        # addBatch's own time goes. Cost: one small dict per epoch.
+        # source planning, commit log). Cost: one small dict per epoch.
         self.epoch_trace: list[dict] = []
 
     # -- epoch processing (D13/D17/D18/D20/D24) ----------------------------
@@ -433,6 +437,11 @@ class StreamingPipeline:
 
     # -- cross-epoch ingest dedup (config.dedup_keys) ----------------------
     _DEDUP_COL = "__dedup_digest"
+    # On-disk ledger schemas (what _write_ledger and _write_neardup_ledger
+    # write). Reads pin them, so a prior-epoch read is pure metadata: an
+    # unpinned read runs a footer-inference job every epoch.
+    _LEDGER_SCHEMA = f"`{_DEDUP_COL}` struct<h1:bigint,h2:bigint>"
+    _ND_LEDGER_SCHEMA = "band int, sig bigint"
 
     def _digest(self) -> "F.Column":
         # 128-bit key as two seed-split xxhash64s — the repo's production
@@ -486,18 +495,22 @@ class StreamingPipeline:
         df = df.dropDuplicates([self._DEDUP_COL])
         prior = self._ledger_paths(epoch_id)
         if prior:
-            hist = self.spark.read.parquet(*prior)
+            hist = self.spark.read.schema(self._LEDGER_SCHEMA).parquet(*prior)
             df = df.join(hist, self._DEDUP_COL, "left_anti")
         return df.drop(self._DEDUP_COL)
 
     def _write_ledger(self, src: DataFrame, epoch_id: int) -> None:
-        """Record the digests this epoch actually inserted. Overwrite
-        per-epoch dir: a replayed epoch rewrites the same state, so a
-        crash between sink write and ledger write heals on replay."""
+        """Record the digests this epoch actually inserted, as one
+        shuffle-free write job. ``src`` is the epoch's landed rows, which
+        dropDuplicates and the anti-join already made digest-unique, so
+        no distinct is needed (tests/test_ingest_dedup.py checks every
+        ledger dir: digests == distinct digests == the epoch's raw rows).
+        Overwrite per-epoch dir: a replayed epoch rewrites the same
+        state, so a crash between sink write and ledger write heals on
+        replay."""
         path = os.path.join(self._ledger_root, f"epoch={epoch_id}")
         (
             src.select(self._digest().alias(self._DEDUP_COL))
-            .distinct()
             .write.mode("overwrite")
             .parquet(path)
         )
@@ -587,7 +600,11 @@ class StreamingPipeline:
         prior = self._ledger_paths(epoch_id, root=self._neardup_root)
         if not prior:
             return df
-        hist = self.spark.read.parquet(*prior).distinct()
+        hist = (
+            self.spark.read.schema(self._ND_LEDGER_SCHEMA)
+            .parquet(*prior)
+            .distinct()
+        )
         # Row id is the same two-seed 128-bit family as _digest: a lone
         # 64-bit xxhash64 colliding between a flagged near-dup and an
         # unrelated row in the batch would make the left_anti drop the
@@ -617,7 +634,8 @@ class StreamingPipeline:
         """Record the band keys of what this epoch actually inserted —
         same overwrite-per-epoch replay-healing contract as
         :meth:`_write_ledger` (and the same narrow-projection rule as
-        the gate)."""
+        the gate). Unlike the digest ledger this one keeps its
+        ``distinct``: different rows share band keys."""
         path = os.path.join(self._neardup_root, f"epoch={epoch_id}")
         narrow = src.select(F.col(self.config.neardup_col).alias("__nd_txt"))
         (
@@ -690,6 +708,30 @@ class StreamingPipeline:
             fh.write(json.dumps({"epoch": epoch_id, "table": table, "path": path}) + "\n")
 
     def _process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
+        """Run one epoch. With the raw sink on, its jobs are:
+
+        1. the raw write. Decode and, with dedup on, the dropDuplicates
+           (one map stage before the write) and the anti-join against
+           the prior ledger epochs (schema-pinned read, broadcast) run
+           inside it, so the rows it writes are digest-unique.
+        2. the derived writes, all reading one schema-pinned readback of
+           the raw dir: the normalized and custom sinks run one after
+           another on this thread, while the digest ledger (one job) and
+           the near-dup ledger run on a second thread beside them.
+        3. post-SQL over the written dirs, then publish.
+
+        Every write of step 2 is awaited, and its error re-raised, before
+        step 3 starts, so an epoch publishes only after all of its output
+        landed and no job of the epoch outlives this call. The ledger
+        thread carries this thread's local properties, so it runs in the
+        stream's job group and ``query.stop()`` cancels its jobs too.
+        Without the raw sink (D14) step 2 reads a persisted decode and
+        runs sequentially: concurrent actions on a cache that is not yet
+        materialized would each decode the batch.
+
+        ``epoch_trace`` records step 1 as ``raw_s``, step 2 (ledgers
+        included) as ``derived_s`` and step 3 as ``epilogue_s``.
+        """
         import time as _time
 
         from pyspark.sql import Observation
@@ -712,25 +754,17 @@ class StreamingPipeline:
             decoded = self._dedup_against_history(decoded, epoch_id)
         if self.config.neardup_col:
             decoded = self._neardup_against_history(decoded, epoch_id)
-        # Downstream-source strategy: with the raw sink ON, this epoch's
-        # raw parquet IS the cache — decode runs exactly once (inside the
-        # raw write) and norm/custom derive from a columnar, pruned,
-        # shuffle-free read-back of the just-written files, the same
-        # shape the batch ingest path uses. persist() of the decoded
-        # rows (the previous strategy) materializes fat deserialized
-        # rows a second time in executor memory and was the main
-        # streaming-vs-batch throughput gap; it remains only as the
-        # fallback when the raw sink is toggled off (D14) but derived
-        # tables still need the batch more than once.
+        # Downstream source: with the raw sink ON, this epoch's raw
+        # parquet IS the cache — decode runs exactly once (inside the raw
+        # write) and every derived write reads a columnar, pruned,
+        # shuffle-free readback of the just-written files. persist() of
+        # the decoded rows (fat deserialized rows held a second time in
+        # executor memory) is only the fallback when the raw sink is
+        # toggled off (D14) but the batch still has several consumers.
         derived_sinks = (self.normalizer is not None) + (
             len(self.custom.transforms) if self.custom is not None else 0
         )
-        # the dedup ledger write is one more consumer of the decoded
-        # batch (it derives from derived_src, so it rides the readback
-        # when the raw sink is on)
-        ledger_sinks = (1 if self.config.dedup_keys else 0) + (
-            1 if self.config.neardup_col else 0
-        )
+        ledger_sinks = bool(self.config.dedup_keys) + bool(self.config.neardup_col)
         use_readback = self.config.write_raw and (derived_sinks + ledger_sinks) > 0
         decoded_consumers = int(self.config.write_raw) + (
             0 if use_readback else derived_sinks + ledger_sinks
@@ -742,10 +776,8 @@ class StreamingPipeline:
         try:
             raw_n = norm_n = custom_n = 0
             # (table, path, schema): the schema of what was written rides
-            # along so every per-epoch re-read below is schema-pinned —
-            # an unpinned read re-infers from parquet footers on the
-            # driver each epoch (r13's readback finding, r14 applied to
-            # the runner's view reads too)
+            # along so every re-read below is schema-pinned — an unpinned
+            # read re-infers from parquet footers on the driver each epoch
             written: list[tuple[str, str, object]] = []
 
             if self.config.write_raw:
@@ -754,38 +786,46 @@ class StreamingPipeline:
                 written.append((self.config.dest_table, p, decoded.schema))
             _t_raw = _time.monotonic()
 
-            # readback with the KNOWN schema (decoded's own) — schema
-            # inference re-reads every epoch file's footer on the
-            # driver before the first derived job can plan; with the
-            # schema pinned the read is pure metadata (r13, measured
-            # dominant per-epoch fixed term in STREAM_FIXED_COST).
             derived_src = (
                 self.spark.read.schema(decoded.schema).parquet(written[0][1])
                 if use_readback
                 else decoded
             )
 
-            if self.normalizer is not None:
-                norm_table = f"{self.config.dest_table}_norm"
-                p = self._epoch_dir(norm_table, epoch_id)
-                norm_df = self.normalizer.apply(derived_src)
-                norm_n = self._write(norm_df, p, norm_table)
-                written.append((norm_table, p, norm_df.schema))
+            def write_ledgers() -> None:
+                # digests / band keys of the rows that landed
+                if self.config.dedup_keys:
+                    self._write_ledger(derived_src, epoch_id)
+                if self.config.neardup_col:
+                    self._write_neardup_ledger(derived_src, epoch_id)
 
-            if self.custom is not None:
-                for table, df in self.custom.apply_all(derived_src).items():
-                    p = self._epoch_dir(table, epoch_id)
-                    custom_n += self._write(df, p, table)
-                    written.append((table, p, df.schema))
+            with ThreadPoolExecutor(max_workers=1) as pool:
+                ledgers = (
+                    pool.submit(inheritable_thread_target(self.spark)(write_ledgers))
+                    if use_readback and ledger_sinks
+                    else None
+                )
+                try:
+                    if self.normalizer is not None:
+                        norm_table = f"{self.config.dest_table}_norm"
+                        p = self._epoch_dir(norm_table, epoch_id)
+                        norm_df = self.normalizer.apply(derived_src)
+                        norm_n = self._write(norm_df, p, norm_table)
+                        written.append((norm_table, p, norm_df.schema))
+
+                    if self.custom is not None:
+                        for table, df in self.custom.apply_all(derived_src).items():
+                            p = self._epoch_dir(table, epoch_id)
+                            custom_n += self._write(df, p, table)
+                            written.append((table, p, df.schema))
+                finally:
+                    # waits for the ledgers even when a sink write raised,
+                    # and re-raises their error
+                    if ledgers is not None:
+                        ledgers.result()
+            if ledgers is None:
+                write_ledgers()
             _t_der = _time.monotonic()
-
-            if self.config.dedup_keys:
-                # ledger AFTER the sinks: digests of what actually landed
-                self._write_ledger(derived_src, epoch_id)
-
-            if self.config.neardup_col:
-                # band-key ledger AFTER the sinks, same landed-rows rule
-                self._write_neardup_ledger(derived_src, epoch_id)
 
             # D18: post-SQL over the *written* epoch output (the closed
             # file, not the in-flight batch) — true to DuckRunner.

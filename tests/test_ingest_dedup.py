@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from quacfka_spark.sources.kafka import decode_json
@@ -42,7 +43,7 @@ def _write_batches(spark, d: str) -> None:
         )
 
 
-def _run(spark, src: str, out: str) -> StreamingPipeline:
+def _run(spark, src: str, out: str, normalizer=None, **cfg) -> StreamingPipeline:
     source = (
         spark.readStream.schema("value binary")
         .option("maxFilesPerTrigger", "1")
@@ -56,8 +57,10 @@ def _run(spark, src: str, out: str) -> StreamingPipeline:
             dest_table="messages",
             available_now=True,
             dedup_keys=["r.user_id", "r.amount"],
+            **cfg,
         ),
         decode=lambda df: decode_json(df, NESTED_SCHEMA),
+        normalizer=normalizer,
     )
     q = pipe.start()
     q.awaitTermination(180)
@@ -200,6 +203,42 @@ def test_dedup_with_raw_sink_off(spark, tmp_path):
     assert (
         spark.read.parquet(os.path.join(out, "_dedup_ledger")).count() == 200
     )
+
+
+@pytest.mark.parametrize("write_raw", [True, False])
+def test_ledger_epochs_hold_one_digest_per_landed_row(spark, tmp_path, write_raw):
+    """In every ledger epoch dir, digests == distinct digests == the
+    rows that epoch landed (raw rows; normalized rows without the raw
+    sink, where this 1:1 normalizer stands in for them). The epoch with
+    the in-batch duplicate is covered. This is why the ledger write
+    needs no distinct: its input is already digest-unique."""
+    from quacfka_spark.plans.normalizer import NormalizerSpec
+
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "out")
+    _write_batches(spark, src)
+    pipe = _run(
+        spark,
+        src,
+        out,
+        normalizer=NormalizerSpec(
+            fields=["r.user_id", "r.amount"], aliases=["user_id", "amount"]
+        ),
+        write_raw=write_raw,
+    )
+    landed = {
+        e: (raw if write_raw else norm)
+        for e, (_, raw, norm, _) in pipe.metrics.epoch_rows().items()
+    }
+    assert sorted(landed.values(), reverse=True) == [100, 50, 50]
+    root = os.path.join(out, "_dedup_ledger")
+    dirs = sorted(os.listdir(root))
+    assert dirs == [f"epoch={e}" for e in sorted(landed)]
+    for name in dirs:
+        ledger = spark.read.parquet(os.path.join(root, name))
+        n = ledger.count()
+        assert n == ledger.distinct().count(), name
+        assert n == landed[int(name.split("=", 1)[1])], name
 
 
 def test_ledger_horizon_readmits_old_content(spark, tmp_path):

@@ -1044,3 +1044,32 @@ def test_int8_band_exchange_ships_tinyint(plans):
         assert any(
             "embedding:array<float" in s for s in read_schemas(p)
         ), (key, read_schemas(p))
+
+
+def test_jvm_decode_udf_runs_once_per_row(spark):
+    """decode_protobuf_jvm's optimized plan calls the decode UDF once:
+    the malformed-row filter (D8) sits above the generator that decodes,
+    instead of being pushed below a projection with the UDF substituted
+    into it, which decoded every row twice."""
+    from pyspark.sql import functions as F
+
+    from quacfka_spark.bench_ingest import SHAPES
+    from quacfka_spark.sources.proto_jvm import (
+        decode_protobuf_jvm,
+        encode_protobuf_jvm,
+        jvm_codec_available,
+    )
+
+    if not jvm_codec_available(spark):
+        pytest.skip("JVM codec jar not loadable")
+    shape = SHAPES["small"]
+    good = spark.range(8).select(
+        encode_protobuf_jvm(spark, shape.payload(F.col("id")), shape.spec).alias(
+            "value"
+        )
+    )
+    bad = spark.createDataFrame([(b"\xff\xff",)], "value binary")
+    out = decode_protobuf_jvm(good.union(bad), shape.spec)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("qf_pdec_") == 1, plan
+    assert out.count() == 8  # the malformed row still drops

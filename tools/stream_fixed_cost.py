@@ -1,6 +1,5 @@
 #!/usr/bin/env python
-"""Attribute the streaming-wide per-micro-batch fixed cost (r12
-verdict #4).
+"""Attribute the streaming-wide per-micro-batch fixed cost.
 
 INGEST_WIDE_PASSCURVE.json fits the wide STREAMING ingest at ~656 MB/s
 asymptote with ~2.8 s fixed cost per pass vs batch's ~930 / ~1.2 s;
@@ -14,9 +13,11 @@ each epoch's wall from two independent vantage points:
   commitOffsets (the exactly-once checkpoint barrier), addBatch (our
   foreachBatch body), triggerExecution (the whole epoch);
 - the PIPELINE's per-epoch phase trace (StreamingPipeline.epoch_trace):
-  raw-sink write vs derived-sink (readback + normalizer) write vs
-  epilogue (publish/metrics), plus the inter-epoch gap (epoch N exit
-  to N+1 enter = everything the engine does between addBatch calls).
+  raw-sink write (raw_s) vs derived writes (derived_s: readback +
+  normalizer here; a dedup pipeline's ledger writes overlap them and
+  count there too) vs epilogue (epilogue_s: post-SQL, none here, plus
+  publish and metrics), plus the inter-epoch gap (epoch N exit to N+1
+  enter = everything the engine does between addBatch calls).
 
 Two payload sizes give a two-point linear fit per term: the intercept
 is that term's FIXED cost per epoch (what the pass-curve's 2.8 s is
